@@ -422,6 +422,7 @@ def pagerank(
     weight: str | None = None,
     iters: int = 8,
     damping: float = 0.85,
+    handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(node, rank) after ``iters`` power-method iterations of weighted
     PageRank with damping — the standard importance measure over a link
@@ -461,6 +462,11 @@ def pagerank(
     connected_components discipline); the dangling term is an O(1)-row
     in-plan aggregate broadcast into the update, never a driver loop over
     nodes. Driver-side state: only N (one count of the node table).
+
+    The four persisted intermediates (edges, nodes, normalized edges, the
+    node/out-count join) go into ``handles`` when a list is passed. Every
+    tier returns a frame read from its own checkpoint, so the caller can
+    ``operators.dedup.release`` them as soon as this returns.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -508,6 +514,8 @@ def pagerank(
     has_dangling = _st["nsrc"] < n_nodes
     n_edges = int(_st["ne"] or 0)
     dangling = nw.where(F.col("__cnt").isNull()).select("node")
+    if handles is not None:
+        handles.extend((e, nodes, enorm, nw))
 
     # r14 optimization, phase 5 (guide §2.4/§2.1): when the whole model
     # (edges + nodes) is small, the power iteration runs EXCHANGE-FREE —

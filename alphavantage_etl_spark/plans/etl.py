@@ -12,7 +12,8 @@ as one idempotent, rerunnable pipeline over parquet sink tables:
    (av_etl.py:37-38) is designed out: duplicates are impossible by
    construction, so a rerun appends nothing instead of crashing.
 3. **derived refresh**: recompute the converted-price table for the new
-   dates only (av_etl.py:142-195) and append.
+   dates only (av_etl.py:142-195) — ``views.convert`` over the two price
+   sinks — and append.
 
 Unlike the reference (tasks exchange state only through Postgres,
 av_etl_dag.py:21-46), the intermediate frames here are lazy DataFrames in
@@ -20,8 +21,10 @@ one session — the sink is a durability boundary, not an IPC channel.
 
 Scale: every append is partitioned parquet; the watermark probe is a
 1-row aggregate; the anti-join broadcasts the sink's key projection (one
-row per date). Swap the path for a Delta/Iceberg table URI and ``MERGE
-INTO`` replaces append for exactly-once semantics under concurrent writers.
+row per date). Sink reads pass the schema of the frame written there, so
+no read runs a schema-inference job over the sink's footers. Swap the path
+for a Delta/Iceberg table URI and ``MERGE INTO`` replaces append for
+exactly-once semantics under concurrent writers.
 """
 
 from __future__ import annotations
@@ -33,11 +36,11 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..functions.rounding import money_round
 from ..operators.incremental import new_rows
 from ..sources.catalog import read_path_if_exists
-from .views import fx_bars, px_bars
+from .views import convert, fx_bars, px_bars
 
 T = TypeVar("T")
 
@@ -50,10 +53,14 @@ def _sink_path(sink_dir: str, table: str) -> str:
     return os.path.join(sink_dir, table)
 
 
-def _read_sink(spark: SparkSession, sink_dir: str, table: str) -> DataFrame | None:
+def _read_sink(
+    spark: SparkSession, sink_dir: str, table: str, schema: StructType
+) -> DataFrame | None:
     # IO4 probe: None only for a genuinely-absent sink (first run); corrupt
-    # or unreadable sinks raise instead of masquerading as fresh ones
-    return read_path_if_exists(spark, _sink_path(sink_dir, table))
+    # or unreadable sinks raise instead of masquerading as fresh ones. The
+    # sink holds what this pipeline wrote, so its schema is known and the
+    # read skips inference.
+    return read_path_if_exists(spark, _sink_path(sink_dir, table), schema=schema)
 
 
 def _append_new(
@@ -72,7 +79,7 @@ def _append_new(
     """
     from pyspark.sql import Observation
 
-    existing = _read_sink(spark, sink_dir, table)
+    existing = _read_sink(spark, sink_dir, table, incoming.schema)
     fresh = incoming if existing is None else new_rows(incoming, existing, key)
     obs = Observation()
     fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -114,15 +121,9 @@ def run_etl(
 
     # Derived refresh reads the SINK (not the source frames) — same contract
     # as the reference, where prd_ is computed from the loaded src_ tables.
-    px = _read_sink(spark, sink_dir, SRC_PX).select(
-        "date", F.col("close").alias("close_price_usd")
-    )
-    fx = _read_sink(spark, sink_dir, SRC_FX).select(
-        "date", F.col("close").alias("close_rate")
-    )
-    prd = px.join(fx, "date", "inner").withColumn(
-        "close_price_fx",
-        money_round(F.col("close_price_usd") * F.col("close_rate"), 2),
+    prd = convert(
+        _read_sink(spark, sink_dir, SRC_PX, px_f.schema),
+        _read_sink(spark, sink_dir, SRC_FX, fx_f.schema),
     )
     appended[PRD] = _append_new(spark, sink_dir, PRD, prd, "date")
     return appended

@@ -19,9 +19,12 @@ alongside as the honest reading. The engine boundary is explicit:
 
 - everything upstream of ``render_report`` is a lazy Spark plan
   (``plans.report.report_frames``);
-- ``render_report`` is the DRIVER EDGE: it limits each frame to
-  ``max_rows`` (the frames are date-DESC, so this is "most recent N" — a
-  TakeOrderedAndProject, never a full collect) and calls ``toPandas()``;
+- ``render_report`` is the DRIVER EDGE: three ``toPandas()`` calls, one
+  per series, each limited to ``max_rows`` (the frames are date-DESC, so
+  this is "most recent N" — a TakeOrderedAndProject, never a full
+  collect). The comparison pair and the three data tables are pandas
+  column slices of those frames (``iloc[:, :5]``/``[:, :4]``, as in
+  data_viz.py:185-188), not further Spark queries;
 - ``publish_report`` mirrors ``report.save(path=.../index.html)``
   (to_github_pages.py:106). The git push itself needs a remote + token
   (``AV_ETL_GITHUB_TOKEN``/``AV_ETL_REMOTE_REPO`` in the reference) and is
@@ -368,14 +371,19 @@ def render_report(
     comparison section, data-table select. ``max_rows`` bounds the driver
     edge — each frame is already date-DESC, so ``limit`` takes the most
     recent rows as a TakeOrderedAndProject, regardless of corpus size.
+    The comparison pair and the data tables are column slices of the three
+    collected frames.
     """
 
-    def edge(name: str) -> "pd.DataFrame":
-        return frames[name].limit(max_rows).toPandas()
-
-    px, fx, conv = edge("px"), edge("fx"), edge("converted")
-    px_t, fx_t, conv_t = edge("px_table"), edge("fx_table"), edge("converted_table")
-    comparison = edge("comparison")
+    px, fx, conv = (
+        frames[name].limit(max_rows).toPandas() for name in ("px", "fx", "converted")
+    )
+    # P2: df.iloc[:, 0:5] / [:, 0:4] (data_viz.py:185-188); date is unique
+    # per bar, so these are the rows a narrower ORDER BY ... LIMIT selects
+    px_t, fx_t, conv_t = px.iloc[:, :5], fx.iloc[:, :4], conv.iloc[:, :4]
+    comparison = conv[["date", "close_price_usd", "close_price_fx"]].rename(
+        columns={"close_price_usd": "close_usd", "close_price_fx": "close_fx"}
+    )
 
     sym, ccy = symbol.upper(), currency.upper()
     fig1_title = f"{sym} price in USD"

@@ -2,11 +2,13 @@
 (data_viz.py:81-192) minus chart rendering.
 
 The engine's responsibility ends at the frames (SURVEY.md section 3.3):
-three DESC-ordered scans (data_viz.py:87-98), six SMA windows over them
-(:100-109, k ∈ {20, 90} from constants.py:17), the dual-axis comparison
-pair (:143-161), and the first-N-column data tables (P2, :185-188). Chart +
-HTML assembly is consumption-layer: call ``.toPandas()`` on these frames
-and hand them to any plotting stack (the reference used plotly/datapane).
+three DESC-ordered scans (data_viz.py:87-98) and six SMA windows over them
+(:100-109, k ∈ {20, 90} from constants.py:17). Each fact table is loaded
+once, so its schema is inferred once: ``converted`` joins the same two bar
+frames. The dual-axis comparison pair (:143-161) and the first-N-column
+data tables (P2, :185-188) are column subsets of these frames;
+``plans.render`` takes them as pandas positional slices after its three
+``toPandas`` calls, as the reference does.
 
 Scale: every frame is a lazy plan over the one-row-per-date bar
 aggregations; nothing here collects. The SMA windows are global-order by
@@ -20,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.windows import sma
-from .views import fx_bars, prd_converted, px_bars
+from .views import convert, fx_bars, px_bars
 
 SMA_WINDOWS = (20, 90)  # constants.py:17
 
@@ -38,31 +40,15 @@ def _with_smas(df: DataFrame, value_col: str) -> DataFrame:
 
 
 def report_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All frames the report consumes, keyed by block name.
-
-    - ``px`` / ``fx`` / ``converted``: full history, date DESC (the
-      reference's scan order), with sma20/sma90 trend columns.
-    - ``*_table``: the first-N-column data tables (P2 positional slice —
-      5 for price, 4 for FX, 4 for the comparison table).
-    - ``comparison``: the dual-axis pair (converted close vs USD close) the
-      ComparisonFigure plots against twin y-axes (data_viz.py:9-38).
-    """
-    px = _with_smas(px_bars(spark, sf_dir), "close")
-    fx = _with_smas(fx_bars(spark, sf_dir), "close")
-    prd = _with_smas(prd_converted(spark, sf_dir), "close_price_fx")
-
-    frames = {
-        "px": px.orderBy(F.desc("date")),
-        "fx": fx.orderBy(F.desc("date")),
-        "converted": prd.orderBy(F.desc("date")),
-        # P2: df.iloc[:, 0:5] / [:, 0:4] (data_viz.py:185-188)
-        "px_table": px.select(px.columns[:5]).orderBy(F.desc("date")),
-        "fx_table": fx.select(fx.columns[:4]).orderBy(F.desc("date")),
-        "converted_table": prd.select(prd.columns[:4]).orderBy(F.desc("date")),
-        "comparison": prd.select(
-            "date",
-            F.col("close_price_usd").alias("close_usd"),
-            F.col("close_price_fx").alias("close_fx"),
-        ).orderBy(F.desc("date")),
+    """The three series the report consumes, full history, date DESC (the
+    reference's scan order), each with sma20/sma90 trend columns:
+    ``px``, ``fx`` and ``converted`` (``convert`` of the same two bar
+    frames, so each fact table is loaded once)."""
+    px, fx = px_bars(spark, sf_dir), fx_bars(spark, sf_dir)
+    return {
+        "px": _with_smas(px, "close").orderBy(F.desc("date")),
+        "fx": _with_smas(fx, "close").orderBy(F.desc("date")),
+        "converted": _with_smas(convert(px, fx), "close_price_fx").orderBy(
+            F.desc("date")
+        ),
     }
-    return frames

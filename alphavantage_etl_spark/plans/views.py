@@ -9,8 +9,8 @@ the synthetic star schema:
   ``lineitem.l_discount`` over ``l_shipdate`` — lineitem, not events,
   because the events table's date domain (2024-01) does not overlap the
   orders domain (1995-2001); a same-key join would be vacuously empty.
-- ``prd_converted`` (prd_spy_price_pln analog): inner join on date +
-  half-even-rounded product (av_etl.py:187-193).
+- ``prd_converted`` (prd_spy_price_pln analog): ``convert`` of the two —
+  inner join on date + half-even-rounded product (av_etl.py:187-193).
 
 ``src_px_usd``/``src_usd_fx`` expose the same frames under the verbatim
 Alpha Vantage column names ("1. open" ... "5. volume", av_etl.py:76,121) to
@@ -56,24 +56,26 @@ def fx_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).drop("volume")
 
 
-def prd_converted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's derived table (av_etl.py:187-193): rename close
-    columns, inner join on date (left+dropna ≡ inner, SURVEY.md J1/P7),
-    converted price = bround(price * rate, 2).
+def convert(px: DataFrame, fx: DataFrame) -> DataFrame:
+    """The reference's derived table (av_etl.py:187-193) over any price and
+    FX bar frames: rename close columns, inner join on date (left+dropna ≡
+    inner, SURVEY.md J1/P7), converted price = bround(price * rate, 2).
 
     Scale: both sides are one-row-per-date aggregates of big fact tables —
     the join keys are low-cardinality and sorted; AQE picks broadcast for
     the smaller side. The shuffle happens in the bars aggregation (where it
     is map-side combined), never on the raw fact rows for the join.
     """
-    px = px_bars(spark, sf_dir).select("date", F.col("close").alias("close_price_usd"))
-    fx = fx_bars(spark, sf_dir).select("date", F.col("close").alias("close_rate"))
-    return (
-        px.join(fx, "date", "inner")
-        .withColumn(
-            "close_price_fx", money_round(F.col("close_price_usd") * F.col("close_rate"), 2)
-        )
+    px = px.select("date", F.col("close").alias("close_price_usd"))
+    fx = fx.select("date", F.col("close").alias("close_rate"))
+    return px.join(fx, "date", "inner").withColumn(
+        "close_price_fx", money_round(F.col("close_price_usd") * F.col("close_rate"), 2)
     )
+
+
+def prd_converted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``convert`` over the fixture bars."""
+    return convert(px_bars(spark, sf_dir), fx_bars(spark, sf_dir))
 
 
 def src_px_usd(spark: SparkSession, sf_dir: str) -> DataFrame:

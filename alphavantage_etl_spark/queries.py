@@ -44,6 +44,7 @@ from .operators.dedup import (
     minhash_near_dups,
     minhash_verified_near_dups,
     ngram_jaccard_pairs,
+    release,
 )
 from .operators.asof import asof_join
 from .operators.incremental import merge_incremental, new_rows
@@ -2774,7 +2775,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("src", "dst", "cnt")
     )
-    ranks = pagerank(edges, "src", "dst", weight="cnt", iters=8, damping=0.85)
+    handles: list[DataFrame] = []
+    ranks = pagerank(
+        edges, "src", "dst", weight="cnt", iters=8, damping=0.85, handles=handles
+    )
+    release(handles)
     return ranks.select(F.col("node").alias("nation"), "rank")
 
 

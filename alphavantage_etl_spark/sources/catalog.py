@@ -20,6 +20,7 @@ the sink table exist yet? Spark needs that same probe in three flavors:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.errors import AnalysisException
 
 from .jdbc import jdbc_reader
@@ -32,7 +33,10 @@ def table_exists(spark: SparkSession, name: str) -> bool:
 
 
 def read_path_if_exists(
-    spark: SparkSession, path: str, format: str = "parquet"
+    spark: SparkSession,
+    path: str,
+    format: str = "parquet",
+    schema: StructType | None = None,
 ) -> DataFrame | None:
     """Path-table probe-and-read: the frame if the path resolves, ``None``
     if it does not exist yet (first run). Any OTHER read failure raises.
@@ -41,9 +45,16 @@ def read_path_if_exists(
     unresolvable" class; IO-level errors (corrupt footer, permission
     denied) surface as different exception types and propagate, so callers
     can never mistake a broken sink for an absent one.
+
+    A known ``schema`` skips inference (a job that reads file footers);
+    the path is still resolved, so absence still returns ``None``, and a
+    corrupt file then raises at the frame's first action.
     """
+    reader = spark.read.format(format)
+    if schema is not None:
+        reader = reader.schema(schema)
     try:
-        return spark.read.format(format).load(path)
+        return reader.load(path)
     except AnalysisException:
         return None
 

@@ -39,14 +39,30 @@ def test_path_probe_absent_vs_present(spark, tmp_path):
     assert path_exists(spark, present)
 
 
-def test_path_probe_propagates_corruption(spark, tmp_path):
+def test_path_probe_with_known_schema(spark, tmp_path):
+    # a given schema skips inference but not the existence probe
+    schema = spark.range(1).schema
+    missing = str(tmp_path / "never_written")
+    assert read_path_if_exists(spark, missing, schema=schema) is None
+
+    present = str(tmp_path / "written")
+    spark.range(5).write.parquet(present)
+    df = read_path_if_exists(spark, present, schema=schema)
+    assert df is not None and df.dtypes == [("id", "bigint")]
+    assert sorted(df.collect()) == sorted(read_path_if_exists(spark, present).collect())
+
+
+@pytest.mark.parametrize("known_schema", [False, True], ids=["inferred", "given"])
+def test_path_probe_propagates_corruption(spark, tmp_path, known_schema):
     # A sink that EXISTS but cannot be read must raise, never report
-    # "first run" — that would silently re-append the whole load.
+    # "first run" — that would silently re-append the whole load. With a
+    # given schema the raise moves from the probe to the first action.
     broken = tmp_path / "broken"
     broken.mkdir()
     (broken / "part-00000.parquet").write_bytes(b"this is not a parquet file")
+    schema = spark.range(1).schema if known_schema else None
     with pytest.raises(Exception) as exc_info:
-        df = read_path_if_exists(spark, str(broken))
+        df = read_path_if_exists(spark, str(broken), schema=schema)
         if df is not None:
             df.count()
     assert exc_info.value is not None

@@ -256,6 +256,34 @@ def test_pagerank_unweighted_defaults_to_count(spark):
     assert got[1] > got[3]  # 1 receives 2's whole rank; 3 only half of 1's
 
 
+@pytest.mark.parametrize(
+    "edges, inplan_rows",
+    [
+        ([(1, 2), (2, 3), (3, 1), (3, 2)], "4096"),  # tiny in-plan tier
+        ([(1, 2), (2, 3), (3, 1), (3, 2)], "0"),  # lazy join-loop tier
+        ([(1, 2), (2, 3), (3, 4)], "4096"),  # dangling: checkpointed loop
+    ],
+    ids=["inplan", "join_loop", "dangling"],
+)
+def test_pagerank_handles_release(spark, edges, inplan_rows):
+    from alphavantage_etl_spark.operators.dedup import release
+    from alphavantage_etl_spark.operators.graph import pagerank
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    spark.conf.set("spark.graft.inplanGraphRows", inplan_rows)
+    try:
+        handles: list = []
+        ranks = pagerank(df, "src", "dst", iters=3, handles=handles)
+        before = sorted(ranks.collect())
+    finally:
+        spark.conf.unset("spark.graft.inplanGraphRows")
+    assert len(handles) == 4, "edges, nodes, enorm and nw must be handed back"
+    assert all(h.storageLevel.useMemory for h in handles)
+    release(handles)
+    assert not any(h.storageLevel.useMemory for h in handles)
+    assert sorted(ranks.collect()) == before, "ranks must not read the handles"
+
+
 # ------------------------------------------------------- triangle count
 def test_triangle_count_known_graphs(spark):
     from alphavantage_etl_spark.operators.graph import triangle_count

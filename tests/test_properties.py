@@ -344,7 +344,6 @@ def test_discretize_bins_are_equi_depth(spark, vals, nbins):
         max_size=40,
     )
 )
-@pytest.mark.slow
 def test_kaplan_meier_monotone_and_bounded(spark, subj):
     """Survival is a non-increasing step function in [0, 1]."""
     from alphavantage_etl_spark.operators.survival import kaplan_meier
@@ -373,7 +372,6 @@ def test_kaplan_meier_monotone_and_bounded(spark, subj):
         max_size=40,
     )
 )
-@pytest.mark.slow
 def test_pagerank_mass_conserved(spark, edges):
     """Total rank stays 1 (up to quantization) on any digraph, dangling
     nodes included."""
@@ -468,7 +466,6 @@ def test_rolling_median_bounded_by_window_extremes(spark, vals, k):
         max_size=40,
     )
 )
-@pytest.mark.slow
 def test_attribution_conservation_laws(spark, events):
     """Linear credit sums to the number of attributable journeys; first
     and last touch counts each sum to the same journey count."""

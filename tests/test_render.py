@@ -8,7 +8,9 @@ from __future__ import annotations
 
 import os
 
-from alphavantage_etl_spark.plans.render import publish_report, render_report
+from pyspark.sql import functions as F
+
+from alphavantage_etl_spark.plans.render import _table, publish_report, render_report
 from alphavantage_etl_spark.plans.report import report_frames
 
 from .conftest import SF_SMALL
@@ -46,6 +48,52 @@ def test_report_tables_carry_bar_columns_and_rows(spark):
     # bounded driver edge: no table exceeds max_rows data rows
     # (11 table blocks: 2 x 3 chart views + comparison + SMA trend + 3 data)
     assert html.count("<tr><td>") <= 11 * 10
+
+
+def test_report_tables_equal_spark_slices(spark):
+    """The data tables and the comparison pair are pandas slices of the
+    three collected frames; each must equal the Spark query that selects
+    the same columns, date DESC, limited to ``max_rows``."""
+    n = 40
+    frames = report_frames(spark, SF_SMALL)
+    px, fx, conv = frames["px"], frames["fx"], frames["converted"]
+    slices = {
+        "SPY price in USD": px.select(px.columns[:5]),
+        "USD/PLN exchange rate": fx.select(fx.columns[:4]),
+        "SPY price comparison in both currencies": conv.select(conv.columns[:4]),
+        "SPY price in PLN and USD — close_usd vs close_fx": conv.select(
+            "date",
+            F.col("close_price_usd").alias("close_usd"),
+            F.col("close_price_fx").alias("close_fx"),
+        ),
+    }
+    cols = [sdf.columns for sdf in slices.values()]
+    assert cols == [
+        ["date", "open", "high", "low", "close"],
+        ["date", "open", "high", "low"],
+        ["date", "close_price_usd", "close_rate", "close_price_fx"],
+        ["date", "close_usd", "close_fx"],
+    ]
+    html = _render(spark, max_rows=n)
+    for caption, sdf in slices.items():
+        pdf = sdf.orderBy(F.desc("date")).limit(n).toPandas()
+        assert len(pdf) > 0
+        assert _table(pdf, caption) in html, caption
+
+
+def test_render_collects_three_frames(spark, monkeypatch):
+    frames = report_frames(spark, SF_SMALL)
+    cls = type(frames["px"])  # the session's concrete DataFrame class
+    calls = []
+    to_pandas = cls.toPandas
+
+    def counted(self, *a, **kw):
+        calls.append(self.columns)
+        return to_pandas(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "toPandas", counted)
+    render_report(frames, max_rows=5)
+    assert len(calls) == 3, calls
 
 
 def test_publish_writes_pages_index(spark, tmp_path):
